@@ -235,21 +235,14 @@ def _execute_bins(
 
     if todo:
         from nessie_spark.lakehouse.scan import IMAGES_DDL
-        from nessie_spark.lakehouse.writer import (
-            _DDL_ARROW,
-            align_to_schema,
-            arrow_schema_from_ddl,
-        )
+        from nessie_spark.lakehouse.writer import arrow_schema_from_ddl, read_aligned
 
-        # Align every input to the CURRENT table schema before concat:
-        # pre-evolution files are NULL-padded, so bins mixing files written
-        # under different schema versions stay well-formed (add-column
-        # evolution is metadata-only; this is where readers reconcile).
-        # Files written before a RENAME/DROP first remap by field id
-        # (fields.live_projection_maps — {} unless evolution history makes
-        # a name-read unsafe); compaction thereby NORMALIZES old files to
-        # the current names, amortizing evolution debt to zero.
-        from nessie_spark.lakehouse.fields import live_projection_maps, remap_arrow
+        # Every input is read onto the CURRENT table schema before concat
+        # (writer.read_aligned), so bins mixing files written under
+        # different schema versions stay well-formed; files written before
+        # a RENAME/DROP remap by field id, so compaction NORMALIZES old
+        # files to the current names, amortizing evolution debt to zero.
+        from nessie_spark.lakehouse.fields import live_projection_maps
 
         aschema = arrow_schema_from_ddl(table.meta.get("schema", IMAGES_DDL))
         remaps = live_projection_maps(
@@ -259,14 +252,8 @@ def _execute_bins(
         def _rewrite_unit(unit: tuple) -> dict:
             bin_id = int(unit[0])
             paths = list(unit[1])
-
-            def _read(p: str) -> pa.Table:
-                t = pq.read_table(os.path.join(root, p))
-                rm = remaps.get(p)
-                return remap_arrow(t, rm, _DDL_ARROW) if rm else t
-
             tbl = pa.concat_tables(
-                [align_to_schema(_read(p), aschema) for p in paths]
+                [read_aligned(root, p, aschema, remaps.get(p)) for p in paths]
             )
             metrics: dict[str, float] = {"input_files": float(len(paths))}
             if reencode:

@@ -395,7 +395,7 @@ def purge_deletes(
 
     from nessie_spark.lakehouse.merge import matched_files_df
     from nessie_spark.lakehouse.scan import IMAGES_DDL
-    from nessie_spark.lakehouse.writer import align_to_schema, arrow_schema_from_ddl
+    from nessie_spark.lakehouse.writer import arrow_schema_from_ddl
 
     entries = table.file_entries(
         columns=["file_path", "min_key", "max_key", "added_snapshot_id", "partition"]
@@ -475,8 +475,8 @@ def purge_deletes(
     ]
     # field-id remaps for inputs written before a rename/drop ({} unless
     # evolution history makes a name-read unsafe)
-    from nessie_spark.lakehouse.fields import live_projection_maps, remap_arrow
-    from nessie_spark.lakehouse.writer import _DDL_ARROW
+    from nessie_spark.lakehouse.fields import live_projection_maps
+    from nessie_spark.lakehouse.writer import read_aligned
 
     remaps = live_projection_maps(table, paths=[p for _, p, _, _ in todo])
 
@@ -490,11 +490,7 @@ def purge_deletes(
             int(unit[0]), str(unit[1]), int(unit[2]), str(unit[3]),
         )
         aschema = arrow_schema_from_ddl(table_ddl)
-        tbl = pq.read_table(os.path.join(root, path))
-        rm = remaps.get(path)
-        if rm:
-            tbl = remap_arrow(tbl, rm, _DDL_ARROW)
-        tbl = align_to_schema(tbl, aschema)
+        tbl = read_aligned(root, path, aschema, remaps.get(path))
         out = tbl
         # positional deletes FIRST: positions index the original file's
         # row order, which remap/align preserve and the equality filter

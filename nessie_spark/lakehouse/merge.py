@@ -4,29 +4,60 @@ north_rule (BASELINE.json:14): "copy-on-write MERGE INTO built on a
 broadcast-or-sort-merge matched-files join with salted repartitioning for
 phash hot-key skew".
 
-Phases (each lineage-checkpointed):
-1. **matched-files join** — source keys against per-file ``[min_key,
-   max_key]`` stats (an interval-containment join; the file-stats side is
-   tiny → broadcast). Only files that *can* contain a source key are
-   rewritten; everything else is carried forward untouched. This is the
-   engine's graft of the reference's span-alignment interval join
-   (/root/reference/nessie/task_support/span_labeling.py:65-114).
-2. **row join** — target rows of matched files vs source on ``image_id``:
-   broadcast when the source is under ``broadcast_threshold`` rows, else
-   sort-merge (AQE skew backstop on; see plans/skew.py for the explicit
-   salted path used on phash-keyed aggregations).
-3. **rewrite + commit** — updated ∪ unchanged ∪ inserted rows repartitioned
-   to target file size and written; matched files deleted, new files added,
-   one atomic snapshot.
+One bounded probe picks the plan: the first ``broadcast_threshold_rows +
+1`` source keys, collected in one Spark job.
+
+**Small source** — a file-local rewrite shaped like compaction
+(compact._execute_bins), three Spark jobs in all counting the probe:
+
+1. **candidate files, on the driver** — the sorted source keys are tested
+   against the manifest entries the driver already holds: bisect over each
+   file's ``[min_key, max_key]`` (``[min_phash, max_phash]`` for phash
+   merges), then the file's key bloom (image_id merges). No Spark job.
+   A sorted-key sweep of the same interval containment matched_files_df
+   joins on the huge-source path.
+2. **source rows** — collected once (the window dedup by image_id runs
+   first only when the probe saw a duplicate image_id), stamped with their
+   hidden-partition value, and shipped to the tasks as a broadcast
+   variable.
+3. **rewrite** — candidate files FFD-packed into bins at ``target_bytes``;
+   one job runs every unit, at most one task per core. A unit reads its
+   files with pyarrow (writer.read_aligned, shared with compaction), drops
+   the rows whose key is in the source, appends the source rows for the
+   keys it found (``when_matched='update'``), sorts by image_id — outputs
+   stay key-clustered, which keeps the next merge's interval test narrow
+   — and writes one file per partition value. A candidate file holding
+   none of the keys (an interval or bloom false positive) stays live
+   untouched. Source keys outside every candidate file are inserts,
+   written by their own units in the same job; candidate keys that no
+   unit found are inserted once, on the driver, after the job. Every unit
+   records ``updated/unchanged/inserted/deleted/bytes_in/bytes_out`` in
+   its lineage metrics.
+
+**Huge source** — the shuffle plan:
+
+1. **matched-files join** — source keys against the per-file key stats
+   (matched_files_df: broadcast interval join, range-bucketed hash join
+   for large manifests).
+2. **row join** — the matched files' rows vs the deduped source: one
+   sort-merge full outer join (AQE skew backstop on), with target keys of
+   ``hot_key_rows`` or more rows routed through plans/skew.salted_join.
+3. **rewrite** — the merged rows range-partitioned on image_id to the
+   target file size (key-clustered outputs), one lineage unit.
+
+Both plans end in one atomic snapshot: rewritten files out, new files in.
 """
 
 from __future__ import annotations
 
+import bisect
 import math
 import os
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -146,6 +177,7 @@ class MergeResult:
     deleted: int
 
 
+
 def merge_into(
     spark: SparkSession,
     table: Table,
@@ -165,20 +197,19 @@ def merge_into(
     construction). ``key='phash'`` merges by perceptual hash — the
     near-duplicate purge shape, where the synthetic table's planted hot
     phashes make the row join skewed; ``when_matched`` must be ``delete``
-    there (updating a multi-row key would duplicate image_ids). The
-    huge-source path runs a hot-key detector and routes hot keys through
-    ``plans/skew.salted_join`` (north_rule: "salted repartitioning for
-    phash hot-key skew"), with AQE skew-join as the backstop for the rest.
+    there (updating a multi-row key would duplicate image_ids). Sources of
+    at most ``broadcast_threshold_rows`` rows take the file-local rewrite;
+    larger ones the shuffle plan, which runs a hot-key detector and routes
+    hot keys through ``plans/skew.salted_join`` (north_rule: "salted
+    repartitioning for phash hot-key skew"), with AQE skew-join as the
+    backstop for the rest.
     """
     assert when_matched in ("update", "delete")
     assert when_not_matched in ("insert", "ignore")
     assert key in ("image_id", "phash")
-    # the uniqueness property, stated ONCE: image_id is the table's unique
-    # row key; every other supported key is multi-row. Downstream logic
-    # (hot-key detection, delete-only restriction) keys off this flag, not
-    # the column name.
-    unique_key = key == "image_id"
-    assert unique_key or when_matched == "delete", (
+    # image_id is the table's unique row key; every other supported key is
+    # multi-row, so it may only delete
+    assert key == "image_id" or when_matched == "delete", (
         "multi-row merge keys require when_matched='delete'"
     )
     job_id = job_id or f"merge-{uuid.uuid4().hex[:8]}"
@@ -191,6 +222,285 @@ def merge_into(
 
     require_no_pending_deletes(table, "merge_into")
 
+    # Evolved tables: rewrites carry the CURRENT schema (old files
+    # NULL-backfill), so the source must carry it in full — a narrower
+    # source would silently null evolved columns on every rewritten row.
+    from nessie_spark.lakehouse.writer import ddl_columns
+
+    table_ddl = table.meta.get("schema", IMAGES_DDL)
+    data_cols = ddl_columns(table_ddl)
+    missing = [c for c in data_cols if c not in source.columns]
+    if missing:
+        raise ValueError(
+            f"merge source lacks table columns {missing}; on an evolved "
+            "table the source must carry the full schema"
+        )
+
+    probe = (
+        source.select(*dict.fromkeys(["image_id", key]))
+        .limit(broadcast_threshold_rows + 1)
+        .toArrow()
+    )
+    if probe.num_rows <= broadcast_threshold_rows:
+        out = _merge_local(
+            spark, table, job_id, source, probe, table_ddl, data_cols, key,
+            when_matched, when_not_matched, target_bytes,
+        )
+    else:
+        out = _merge_shuffle(
+            spark, table, job_id, source, table_ddl, data_cols, key,
+            when_matched, when_not_matched, target_bytes, n_salts, hot_key_rows,
+        )
+    if out is None:
+        # nothing matched, nothing written: committing an (empty) 'merge'
+        # snapshot would permanently poison incremental reads over the
+        # window (scan_incremental refuses to cross row-changing ops)
+        return MergeResult(None, job_id, 0, 0, 0, 0, 0)
+    added, rewritten, counts = out
+    snap = table.commit(
+        "merge",
+        added=added,
+        deleted_paths=set(rewritten),
+        summary={"job_id": job_id, "updated": counts["updated"],
+                 "inserted": counts["inserted"], "deleted": counts["deleted"]},
+    )
+    lineage.mark_committed(root, job_id, snap)
+    return MergeResult(snap, job_id, len(rewritten), **counts)
+
+
+def _dedup_by_image_id(source: DataFrame, data_cols: list[str]) -> DataFrame:
+    """Duplicate source ROWS (same image_id) would produce duplicate rows
+    in the rewritten table (r1 ADVICE); SQL MERGE makes them an error — we
+    dedupe deterministically instead (max row per image_id under a total
+    column order), one shuffle of the (small) source side. The dedup is by
+    the table's unique row key, NOT the merge key: under a multi-row key
+    (phash) two DISTINCT images sharing a hash are both legitimate source
+    rows and must both survive to insert."""
+    from pyspark.sql.window import Window
+
+    wdup = Window.partitionBy("image_id").orderBy(
+        *[F.desc(c) for c in data_cols if c != "image_id"]
+    )
+    return (
+        source.withColumn("_rn", F.row_number().over(wdup))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def _merge_local(
+    spark: SparkSession,
+    table: Table,
+    job_id: str,
+    source: DataFrame,
+    probe: pa.Table,
+    table_ddl: str,
+    data_cols: list[str],
+    key: str,
+    when_matched: str,
+    when_not_matched: str,
+    target_bytes: int,
+):
+    """The small-source plan (module docstring). Returns ``(added entries,
+    rewritten paths, counts)``, or None when the merge changes nothing."""
+    from nessie_spark.lakehouse.bloom import bloom_might_contain
+    from nessie_spark.lakehouse.fields import live_projection_maps
+    from nessie_spark.lakehouse.partition import (
+        PVAL_COL, partition_value_py, table_spec,
+    )
+    from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA
+    from nessie_spark.lakehouse.writer import (
+        align_to_schema, arrow_schema_from_ddl, read_aligned, split_by_pval,
+        stats_entry_for, write_table_file,
+    )
+    from nessie_spark.plans.ffd import ffd_pack
+
+    root = table.root
+    ids = probe.column("image_id")
+    if pc.count_distinct(ids, mode="all").as_py() < len(ids):
+        source = _dedup_by_image_id(source, data_cols)
+    aschema = arrow_schema_from_ddl(table_ddl)
+    src = align_to_schema(source.select(*data_cols).toArrow(), aschema)
+    if src.num_rows == 0:
+        return None
+    spec = table_spec(table)
+    pvals = (
+        [
+            partition_value_py(spec, r)
+            for r in src.select([f["source"] for f in spec]).to_pylist()
+        ]
+        if spec
+        else [""] * src.num_rows
+    )
+    src = src.append_column(PVAL_COL, pa.array(pvals, pa.string()))
+
+    # --- candidate files: interval (+ bloom) test on the driver
+    by_id = key == "image_id"
+    lo, hi = ("min_key", "max_key") if by_id else ("min_phash", "max_phash")
+    entries = table.file_entries(
+        columns=["file_path", "file_size_bytes", "partition", lo, hi]
+        + (["key_bloom"] if by_id else [])
+    ).to_pylist()
+    keys = src.column(key).to_pylist()
+    skeys = sorted({k for k in keys if k is not None})
+    cand: dict[str, list] = {}  # file_path -> source keys it may hold
+    for e in entries:
+        ks = skeys[
+            0 if e[lo] is None else bisect.bisect_left(skeys, e[lo]):
+            len(skeys) if e[hi] is None else bisect.bisect_right(skeys, e[hi])
+        ]
+        if by_id:
+            ks = [k for k in ks if bloom_might_contain(e["key_bloom"], k)]
+        if ks:
+            cand[e["file_path"]] = ks
+    cand_keys = {k for ks in cand.values() for k in ks}
+
+    # --- work units: (files to rewrite, source rows to insert)
+    groups: dict[str, list[dict]] = {}
+    for e in entries:
+        if e["file_path"] in cand:
+            groups.setdefault(e["partition"] or "", []).append(e)
+    units: list[tuple[list, list[int]]] = []
+    for pval in sorted(groups):  # bins never span partition values
+        g = groups[pval]
+        for b in ffd_pack([e["file_size_bytes"] for e in g], target_bytes):
+            units.append((
+                [(g[j]["file_path"], g[j]["file_size_bytes"], pval,
+                  cand[g[j]["file_path"]]) for j in b],
+                [],
+            ))
+    src_ids = src.column("image_id").to_pylist()
+
+    def _insert_order(rows: list[int]) -> list[int]:
+        # (partition, image_id) order: insert files come out key-clustered
+        return sorted(rows, key=lambda i: (pvals[i], src_ids[i] or ""))
+
+    insert = when_not_matched == "insert"
+    if insert:
+        ins = _insert_order([i for i, k in enumerate(keys) if k not in cand_keys])
+        if ins:
+            n = math.ceil(src.take(ins).nbytes / target_bytes)
+            step = math.ceil(len(ins) / n)
+            units += [([], ins[i:i + step]) for i in range(0, len(ins), step)]
+
+    remaps = live_projection_maps(table, paths=list(cand))
+    update = when_matched == "update"
+
+    def _unit(uid: int, files: list, ins: list[int], rows: pa.Table) -> dict:
+        """Rewrite ``files`` minus their source-keyed rows (plus the
+        updated rows) and/or insert source ``rows`` at ``ins``; one file
+        per partition value, one lineage unit."""
+        parts, inputs, found = [], [], set()
+        bytes_in = n_hit = 0
+        for path, size, pval, ks in files:
+            t = read_aligned(root, path, aschema, remaps.get(path))
+            hit = pc.fill_null(pc.is_in(t.column(key), value_set=pa.array(ks)), False)
+            n = pc.sum(hit).as_py() or 0
+            if not n:
+                continue  # interval/bloom false positive: the file stays live
+            inputs.append(path)
+            bytes_in += size
+            n_hit += n
+            found.update(t.column(key).filter(hit).to_pylist())
+            kept = t.filter(pc.invert(hit))
+            parts.append(kept.append_column(
+                PVAL_COL, pa.array([pval] * kept.num_rows, pa.string())
+            ))
+        counts = {
+            "updated": 0,
+            "unchanged": sum(p.num_rows for p in parts),
+            "inserted": len(ins),
+            "deleted": 0 if update else n_hit,
+        }
+        if update and found:
+            upd = rows.filter(pc.is_in(rows.column(key), value_set=pa.array(list(found))))
+            parts.append(upd)
+            counts["updated"] = upd.num_rows
+        if ins:
+            parts.append(rows.take(ins))
+        added = []
+        # no slices when every row of the unit's files was deleted
+        slices = split_by_pval(pa.concat_tables(parts)) if parts else []
+        for k, (pval, part) in enumerate(slices):
+            part = part.drop_columns([PVAL_COL]).sort_by("image_id")
+            suffix = f"-{k}" if len(slices) > 1 else ""
+            rel = f"data/{job_id}-merge-u{uid:05d}{suffix}.parquet"
+            size = write_table_file(part, os.path.join(root, rel))
+            added.append(stats_entry_for(part, rel, size, partition=pval))
+        if inputs or added:
+            bytes_out = sum(e["file_size_bytes"] for e in added)
+            lineage.write_unit(
+                root, job_id, "merge", uid,
+                input_files=inputs,
+                output_files=[e["file_path"] for e in added],
+                rows=sum(e["record_count"] for e in added),
+                nbytes=bytes_out,
+                metrics={
+                    **{c: float(v) for c, v in counts.items()},
+                    "bytes_in": float(bytes_in),
+                    "bytes_out": float(bytes_out),
+                },
+            )
+        return {"added": added, "inputs": inputs, "found": list(found), **counts}
+
+    # --- one rewrite job. Units are dealt round-robin onto at most one
+    # task per core: a merge unit is light (no pixel work), so per-task
+    # launch cost dominates — one task per unit, in two or three waves,
+    # measured ~40% slower per merge on a 4-core host.
+    results: list[dict] = []
+    if units:
+        sc = spark.sparkContext
+        n_tasks = min(len(units), sc.defaultParallelism)
+        numbered = list(enumerate(units))
+        dealt = [numbered[i::n_tasks] for i in range(n_tasks)]
+        bsrc = sc.broadcast(src)
+        try:
+            results = (
+                sc.parallelize(dealt, n_tasks)
+                .flatMap(lambda us: [_unit(i, f, ins, bsrc.value) for i, (f, ins) in us])
+                .collect()
+            )
+        finally:
+            bsrc.destroy()
+    if insert:
+        # candidate keys no unit found: a false positive of the interval or
+        # bloom test, so a new row — inserted here, exactly once
+        found = {k for r in results for k in r["found"]}
+        late = _insert_order(
+            [i for i, k in enumerate(keys) if k in cand_keys and k not in found]
+        )
+        if late:
+            results.append(_unit(len(units), [], late, src))
+
+    added = [e for r in results for e in r["added"]]
+    rewritten = [p for r in results for p in r["inputs"]]
+    if not added and not rewritten:
+        return None
+    return (
+        pa.Table.from_pylist(added, schema=FILE_ENTRY_SCHEMA) if added else None,
+        rewritten,
+        {c: sum(r[c] for r in results)
+         for c in ("updated", "unchanged", "inserted", "deleted")},
+    )
+
+
+def _merge_shuffle(
+    spark: SparkSession,
+    table: Table,
+    job_id: str,
+    source: DataFrame,
+    table_ddl: str,
+    data_cols: list[str],
+    key: str,
+    when_matched: str,
+    when_not_matched: str,
+    target_bytes: int,
+    n_salts: int,
+    hot_key_rows: int,
+):
+    """The huge-source plan (module docstring). Returns ``(added entries,
+    rewritten paths, counts)``, or None when the merge changes nothing."""
+    root = table.root
     # --- phase 1: matched-files interval join on the key's min/max stats
     # (column-pruned manifest read: no pixel-stats, no key blooms)
     entries = table.file_entries(
@@ -212,20 +522,7 @@ def merge_into(
     ]
     matched_set = set(matched_paths)
 
-    # --- phase 2: row-level join restricted to matched files.
-    # Evolved tables: read with the CURRENT schema (old files NULL-backfill)
-    # and require the source to carry the full schema — a narrower source
-    # would silently null evolved columns on every rewritten row.
-    from nessie_spark.lakehouse.writer import ddl_columns
-
-    table_ddl = table.meta.get("schema", IMAGES_DDL)
-    data_cols = ddl_columns(table_ddl)
-    missing = [c for c in data_cols if c not in source.columns]
-    if missing:
-        raise ValueError(
-            f"merge source lacks table columns {missing}; on an evolved "
-            "table the source must carry the full schema"
-        )
+    # --- phase 2: row-level join restricted to matched files
     if matched_paths:
         # field-id-aware read: matched files written before a rename/drop
         # project onto the current names (identity fast path otherwise)
@@ -241,106 +538,58 @@ def merge_into(
     else:
         target = spark.createDataFrame([], table_ddl)
 
-    # Duplicate source ROWS (same image_id) would produce duplicate rows
-    # in the rewritten table (r1 ADVICE); SQL MERGE makes them an error —
-    # we dedupe deterministically instead (max row per image_id under a
-    # total column order), one shuffle of the (small) source side. The
-    # dedup is by the table's unique row key, NOT the merge key: under a
-    # multi-row key (phash) two DISTINCT images sharing a hash are both
-    # legitimate source rows and must both survive to insert.
-    from pyspark.sql.window import Window
-
-    wdup = Window.partitionBy("image_id").orderBy(
-        *[F.desc(c) for c in data_cols if c != "image_id"]
-    )
-    source = (
-        source.withColumn("_rn", F.row_number().over(wdup))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    source = _dedup_by_image_id(source, data_cols)
     n_src = source.count()
     src = source.select(*data_cols)
-    small_src = n_src <= broadcast_threshold_rows
     n_hot_matched = 0
-    hot_keys: list = []
     hot_rest_keys = None  # (t_rest, s_rest) key frames when the hot split ran
-
-    if small_src:
-        # broadcast plan: a full-outer join is NOT broadcastable, so split
-        # into three broadcast-able joins — the target (huge side) never
-        # shuffles, which is what keeps CoW merge linear in matched bytes:
-        #   update    = target ⋉ source   (left_semi, broadcast)
-        #   unchanged = target ▷ source   (left_anti, broadcast)
-        #   insert    = source ▷ target-keys (anti on the tiny side)
-        srcb = F.broadcast(src)
-        # broadcast-semi first (no target shuffle), THEN dedupe — the
-        # distinct only shuffles matched keys (≤ |source|, small here) and
-        # is required for multi-row keys, where duplicate overlap keys
-        # would explode the tagging join below
-        key_overlap = target.select(key).join(
-            srcb.select(key), key, "left_semi"
-        ).distinct()
-        tagged_t = target.join(
-            F.broadcast(key_overlap.withColumn("_m", F.lit(True))), key, "left"
+    # Hot-key detector first (keys-only scan of the matched scope): target
+    # keys with ≥ hot_key_rows rows that also occur in the source get the
+    # EXPLICIT salted treatment the north_rule mandates for phash hot keys;
+    # everything else keeps the sort-merge plan with AQE skew-join as
+    # backstop. Unique-key merges (image_id) can never trip the detector.
+    hot_keys = (
+        []  # unique key ⇒ no per-key fan-out possible; skip the scan
+        if key == "image_id"
+        else [
+            r[key]
+            for r in target.groupBy(key)
+            .agg(F.count(F.lit(1)).alias("_c"))
+            .where(F.col("_c") >= hot_key_rows)
+            .join(src.select(key).distinct(), key, "left_semi")
+            .limit(10_000)
+            .collect()
+        ]
+    )
+    if hot_keys:
+        # multi-row key ⇒ when_matched == 'delete' (asserted by the caller):
+        # every hot target row is matched, so it leaves the table. The
+        # matched scope is materialized through the salted join and
+        # consumed for the deleted-row accounting.
+        matched_hot, unchanged_rows, inserted_rows, hot_rest_keys = (
+            hot_delete_split(target, src, key, hot_keys, n_salts)
         )
-        updated_rows = srcb.join(
-            F.broadcast(key_overlap), key, "left_semi"
-        ).withColumn("_action", F.lit("update"))
-        unchanged_rows = tagged_t.where(F.col("_m").isNull()).drop("_m").withColumn(
-            "_action", F.lit("unchanged")
-        )
-        inserted_rows = src.join(
-            F.broadcast(key_overlap), key, "left_anti"
-        ).withColumn("_action", F.lit("insert"))
+        n_hot_matched = matched_hot.count()
+        updated_rows = None  # delete semantics: matched rows vanish
     else:
-        # huge-source plan. Hot-key detector first (keys-only scan of the
-        # matched scope): target keys with ≥ hot_key_rows rows that also
-        # occur in the source get the EXPLICIT salted treatment the
-        # north_rule mandates for phash hot keys; everything else keeps
-        # the sort-merge plan with AQE skew-join as backstop. Unique-key
-        # merges (image_id) can never trip the detector.
-        hot_keys = (
-            []  # unique key ⇒ no per-key fan-out possible; skip the scan
-            if unique_key
-            else [
-                r[key]
-                for r in target.groupBy(key)
-                .agg(F.count(F.lit(1)).alias("_c"))
-                .where(F.col("_c") >= hot_key_rows)
-                .join(src.select(key).distinct(), key, "left_semi")
-                .limit(10_000)
-                .collect()
-            ]
+        # one sort-merge full-outer (AQE skew backstop on)
+        tagged = target.alias("t").join(
+            src.alias("s"), on=F.col(f"t.{key}") == F.col(f"s.{key}"), how="full_outer"
         )
-        if hot_keys:
-            # multi-row key ⇒ when_matched == 'delete' (asserted above):
-            # every hot target row is matched, so it leaves the table. The
-            # matched scope is materialized through the salted join and
-            # consumed for the deleted-row accounting.
-            matched_hot, unchanged_rows, inserted_rows, hot_rest_keys = (
-                hot_delete_split(target, src, key, hot_keys, n_salts)
-            )
-            n_hot_matched = matched_hot.count()
-            updated_rows = None  # delete semantics: matched rows vanish
-        else:
-            # one sort-merge full-outer (AQE skew backstop on)
-            tagged = target.alias("t").join(
-                src.alias("s"), on=F.col(f"t.{key}") == F.col(f"s.{key}"), how="full_outer"
-            )
-            t_id, s_id = F.col(f"t.{key}"), F.col(f"s.{key}")
-            action = (
-                F.when(t_id.isNotNull() & s_id.isNotNull(), F.lit("update"))
-                .when(t_id.isNotNull(), F.lit("unchanged"))
-                .otherwise(F.lit("insert"))
-            )
-            tagged = tagged.withColumn("_action", action)
-            pick = lambda a: tagged.where(F.col("_action") == a)  # noqa: E731
-            side = lambda df, s: df.select(  # noqa: E731
-                *[F.col(f"{s}.{c}").alias(c) for c in data_cols], "_action"
-            )
-            updated_rows = side(pick("update"), "s")
-            unchanged_rows = side(pick("unchanged"), "t")
-            inserted_rows = side(pick("insert"), "s")
+        t_id, s_id = F.col(f"t.{key}"), F.col(f"s.{key}")
+        action = (
+            F.when(t_id.isNotNull() & s_id.isNotNull(), F.lit("update"))
+            .when(t_id.isNotNull(), F.lit("unchanged"))
+            .otherwise(F.lit("insert"))
+        )
+        tagged = tagged.withColumn("_action", action)
+        pick = lambda a: tagged.where(F.col("_action") == a)  # noqa: E731
+        side = lambda df, s: df.select(  # noqa: E731
+            *[F.col(f"{s}.{c}").alias(c) for c in data_cols], "_action"
+        )
+        updated_rows = side(pick("update"), "s")
+        unchanged_rows = side(pick("unchanged"), "t")
+        inserted_rows = side(pick("insert"), "s")
 
     parts = [unchanged_rows]
     if when_matched == "update":
@@ -373,15 +622,17 @@ def merge_into(
     from nessie_spark.lakehouse.partition import PVAL_COL, stamp_pval, table_spec
 
     spec = table_spec(table)
+    # range-partitioned on image_id, so every output file covers its own
+    # key range and the next merge's interval test stays narrow; on a
+    # hidden-partitioned table the range leads with the re-derived
+    # partition value, keeping files partition-pure and prunable (the
+    # writer splits boundary tasks)
     if spec:
-        # hidden-partitioned table: merged rows re-derive their partition
-        # value and range-partition on (pval, key) so rewritten files stay
-        # partition-pure and prunable (writer splits boundary tasks)
         new_rows = stamp_pval(new_rows, spec).repartitionByRange(
             n_files, F.col(PVAL_COL), F.col("image_id")
         )
     else:
-        new_rows = new_rows.repartition(n_files, "image_id")
+        new_rows = new_rows.repartitionByRange(n_files, F.col("image_id"))
 
     stats = write_partition_files(
         new_rows, root, job_id, "merge", data_columns=data_cols
@@ -433,35 +684,24 @@ def merge_into(
         n_unchanged = matched_rows - n_tgt_matched
 
     if not matched_set and total_written == 0:
-        # nothing matched, nothing written: committing an (empty) 'merge'
-        # snapshot would permanently poison incremental reads over the
-        # window (scan_incremental refuses to cross row-changing ops)
-        return MergeResult(None, job_id, 0, 0, 0, 0, 0)
-
+        return None
+    counts = {"updated": n_updated, "unchanged": n_unchanged,
+              "inserted": n_inserted, "deleted": n_deleted}
+    bytes_out = int(sum(stats.column("file_size_bytes").to_pylist() or [0]))
     lineage.write_unit(
         root, job_id, "merge", 0,
         input_files=matched_paths,
         output_files=stats.column("file_path").to_pylist(),
         rows=total_written,
-        nbytes=int(sum(stats.column("file_size_bytes").to_pylist() or [0])),
+        nbytes=bytes_out,
         metrics={
-            "updated": float(n_updated),
-            "unchanged": float(n_unchanged),
-            "inserted": float(n_inserted),
+            **{c: float(v) for c, v in counts.items()},
+            "bytes_in": float(matched_bytes),
+            "bytes_out": float(bytes_out),
             "hot_keys_salted": float(len(hot_keys)),
         },
     )
-    snap = table.commit(
-        "merge",
-        added=stats if stats.num_rows else None,
-        deleted_paths=matched_set,
-        summary={"job_id": job_id, "updated": n_updated,
-                 "inserted": n_inserted, "deleted": n_deleted},
-    )
-    lineage.mark_committed(root, job_id, snap)
-    return MergeResult(
-        snap, job_id, len(matched_paths), n_updated, n_unchanged, n_inserted, n_deleted
-    )
+    return stats if stats.num_rows else None, matched_paths, counts
 
 
 def update_where(
@@ -479,8 +719,8 @@ def update_where(
     ``{"fmt": "'png'"}`` or ``{"w": "w * 2"}``). The source is the
     table's own matching rows with the assignments applied, merged back
     by image_id with ``when_matched='update'`` — so the whole machinery
-    (matched-files pruning via stats, broadcast-vs-range join, PSNR-safe
-    rewrite, snapshot isolation, idempotent job_id) is inherited rather
+    (matched-files pruning via stats, file-local or shuffle rewrite,
+    snapshot isolation, idempotent job_id) is inherited rather
     than re-implemented. Matching-file discovery pushes the predicate into
     the pinned scan; files with no matching row are never rewritten.
 

@@ -182,6 +182,14 @@ def partition_value_col(spec: list[dict]) -> Column:
     return F.concat(*parts)
 
 
+def partition_value_py(spec: list[dict], row: dict) -> str:
+    """Driver-side twin of partition_value_col for one row (source column
+    name → value)."""
+    return "/".join(
+        f"{segment_name(f)}={transform_py(f, row[f['source']])}" for f in spec
+    )
+
+
 def expected_segments(spec: list[dict], source_eq: dict) -> dict[str, str]:
     """Map equality predicates on SOURCE columns to the manifest segments
     they pin. Sources without a predicate contribute nothing (their

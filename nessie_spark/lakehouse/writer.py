@@ -89,6 +89,37 @@ def align_to_schema(tbl: pa.Table, schema: pa.Schema) -> pa.Table:
     return pa.Table.from_arrays(arrays, schema=schema)
 
 
+def read_aligned(
+    table_root: str, path: str, schema: pa.Schema, remap: list | None = None
+) -> pa.Table:
+    """Read one data file with pyarrow inside a rewrite task, projected onto
+    the current table ``schema``. Files written before a rename/drop first
+    remap by field id (``remap``: the file's fields.live_projection_maps
+    entry — a name-read would null a renamed column); every file is then
+    aligned, NULL-padding columns it predates (add-column evolution is
+    metadata-only; this is where readers reconcile)."""
+    tbl = pq.read_table(os.path.join(table_root, path))
+    if remap:
+        from nessie_spark.lakehouse.fields import remap_arrow
+
+        tbl = remap_arrow(tbl, remap, _DDL_ARROW)
+    return align_to_schema(tbl, schema)
+
+
+def split_by_pval(tbl: pa.Table) -> list[tuple[str, pa.Table]]:
+    """Hidden partitioning: a data file never spans partition values.
+    ``[(pval, rows)]`` per distinct ``_pval`` in sorted order — a no-op
+    ``[("", tbl)]`` for rows without the staging column."""
+    from nessie_spark.lakehouse.partition import PVAL_COL
+
+    if PVAL_COL not in tbl.schema.names:
+        return [("", tbl)]
+    return [
+        (g, tbl.filter(pc.equal(tbl.column(PVAL_COL), g)))
+        for g in sorted(set(tbl.column(PVAL_COL).to_pylist()))
+    ]
+
+
 def stats_entry_for(
     tbl: pa.Table, path: str, size_bytes: int, partition: str = ""
 ) -> dict:
@@ -146,7 +177,6 @@ def write_partition_files(
     spec-alignment clustering rewrite, same kernel discipline as compact.
     """
     cols = data_columns or DATA_COLUMNS
-    from nessie_spark.lakehouse.partition import PVAL_COL
 
     def _write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pid = TaskContext.get().partitionId()
@@ -156,18 +186,10 @@ def write_partition_files(
         tbl = pa.Table.from_batches(rows)
         if tbl.num_rows == 0:
             return
-        # hidden partitioning: a data file never spans partition values.
         # The append shuffle range-partitions on (pval, id), so nearly
-        # every task holds ONE value and this split is a no-op; boundary
-        # tasks split into one file per value (deterministic order).
-        if PVAL_COL in tbl.schema.names:
-            groups = sorted(set(tbl.column(PVAL_COL).to_pylist()))
-            slices = [
-                (g, tbl.filter(pc.equal(tbl.column(PVAL_COL), g)))
-                for g in groups
-            ]
-        else:
-            slices = [("", tbl)]
+        # every task holds ONE partition value; boundary tasks split into
+        # one file per value (deterministic order).
+        slices = split_by_pval(tbl)
         for k, (pval, part_tbl) in enumerate(slices):
             suffix = f"-{k}" if len(slices) > 1 else ""
             rel = f"data/{job_id}-{phase}-p{pid:05d}{suffix}.parquet"

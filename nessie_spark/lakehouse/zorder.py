@@ -562,7 +562,7 @@ def run_staged(
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from nessie_spark.lakehouse.writer import align_to_schema, arrow_schema_from_ddl
+        from nessie_spark.lakehouse.writer import arrow_schema_from_ddl, read_aligned
 
         # Uniform shard schema across mixed pre-/post-evolution inputs:
         # every file is aligned (NULL-padded) to the current table schema
@@ -607,14 +607,7 @@ def run_staged(
 
         rows = 0
         for p in paths:
-            tbl = pq.read_table(os.path.join(root, p))
-            rm = remaps.get(p)
-            if rm:
-                from nessie_spark.lakehouse.fields import remap_arrow
-                from nessie_spark.lakehouse.writer import _DDL_ARROW
-
-                tbl = remap_arrow(tbl, rm, _DDL_ARROW)
-            tbl = align_to_schema(tbl, aschema)
+            tbl = read_aligned(root, p, aschema, remaps.get(p))
             wh = (
                 tbl.column("w").to_numpy().astype(np.int64)
                 * tbl.column("h").to_numpy().astype(np.int64)

@@ -278,6 +278,156 @@ def test_gc_sweeps_committed_stage_dirs(spark, tmp_path):
     assert os.path.exists(inflight)
 
 
+# ------------------------------------------- small-source file-local rewrite
+
+
+def _rows_df(spark, rows):
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(rows), schema=synth.IMAGES_SCHEMA)
+
+
+def _captions(spark, t):
+    rows = scan(spark, t).select("image_id", "caption").collect()
+    out = {r.image_id: r.caption for r in rows}
+    assert len(out) == len(rows)  # image_id stays unique
+    return out
+
+
+def test_merge_dedups_duplicate_source_rows(spark, tmp_path):
+    """Two source rows for one image_id collapse to the max row under the
+    total column order (every data column but image_id, descending)."""
+    t, _ = make_table(spark, str(tmp_path / "tb"), n=64)
+    a, b = synth.row_for(42, 9), synth.row_for(42, 9)
+    a["caption"], b["caption"] = "aaa edit", "zzz edit"
+    c, d = synth.row_for(42, 500), synth.row_for(42, 500)  # a new id
+    c["w"], d["w"] = 3, 4
+    res = merge.merge_into(spark, t, _rows_df(spark, [a, b, c, d]), job_id="mdup")
+    assert (res.updated, res.inserted) == (1, 1)
+    t = t.refresh()
+    got = _captions(spark, t)
+    assert len(got) == 65 and got["img_000000000009"] == "zzz edit"
+    ws = scan(spark, t).where(F.col("image_id") == "img_000000000500").collect()
+    assert [r.w for r in ws] == [4]
+
+
+def test_merge_bloom_false_positive_key_inserted_once(spark, tmp_path):
+    """A new id inside a file's key range that also passes that file's
+    bloom filter is a candidate no task finds: it must be inserted exactly
+    once, and the file that only falsely matched stays in place."""
+    from nessie_spark.lakehouse.bloom import bloom_might_contain
+
+    t, _ = make_table(spark, str(tmp_path / "tb"), n=256, mean_rows=256)
+    ents = t.file_entries().to_pylist()
+    e = max(ents, key=lambda x: x["record_count"])
+    lo = int(e["min_key"][4:])
+    # "img_<lo>-<k>" sorts strictly between img_<lo> and img_<lo+1>
+    ghost = next(
+        k for k in (f"img_{lo:012d}-{j}" for j in range(1_000_000))
+        if bloom_might_contain(e["key_bloom"], k)
+    )
+    assert e["min_key"] < ghost < e["max_key"]
+    r = synth.row_for(42, 9000)
+    r["image_id"] = ghost
+    res = merge.merge_into(spark, t, _rows_df(spark, [r]), job_id="mfp")
+    assert (res.inserted, res.updated, res.matched_files) == (1, 0, 0)
+    t = t.refresh()
+    got = _captions(spark, t)
+    assert len(got) == 257 and ghost in got
+    assert e["file_path"] in {x["file_path"] for x in t.file_entries().to_pylist()}
+
+
+def test_merge_after_zorder_matches_model(spark, tmp_path):
+    """After Z-order every file's key range is wide, so most files are
+    interval candidates; the merged row set must still equal the model."""
+    from nessie_spark.lakehouse import zorder
+
+    t, _ = make_table(spark, str(tmp_path / "tb"), n=128, mean_rows=16)
+    zorder.cluster(spark, t, target_bytes=128 * 1024, job_id="z")
+    t = t.refresh()
+    want = _captions(spark, t)
+    rows = []
+    for i in range(3, 128, 9):
+        r = synth.row_for(42, i)
+        r["caption"] = f"edit {i}"
+        rows.append(r)
+    rows += [synth.row_for(42, i) for i in range(128, 134)]
+    for r in rows:
+        want[r["image_id"]] = r["caption"]
+    res = merge.merge_into(spark, t, _rows_df(spark, rows), job_id="mz")
+    assert (res.updated, res.inserted) == (len(range(3, 128, 9)), 6)
+    assert _captions(spark, t.refresh()) == want
+
+
+def test_small_merge_runs_at_most_three_spark_jobs(spark, tmp_path):
+    """Keys probe, source rows, one rewrite job: a per-call shuffle coming
+    back would show up here as extra jobs."""
+    t, _ = make_table(spark, str(tmp_path / "tb"), n=128)
+    src = _merge_source(spark, 128)
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-job-guard", "merge-job-guard")
+    try:
+        res = merge.merge_into(spark, t, src, job_id="mguard")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res.updated > 0 and res.inserted == 8
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("merge-job-guard"))
+    assert 1 <= n_jobs <= 3
+
+
+def test_merge_unit_metrics_sum_to_result(spark, tmp_path):
+    """Per-unit lineage metrics add up to the MergeResult counts, the
+    table's row delta and the bytes the commit added and removed."""
+    from nessie_spark.lakehouse import lineage
+
+    for when_matched, job in (("update", "mu"), ("delete", "md")):
+        t, _ = make_table(spark, str(tmp_path / job), n=128, mean_rows=16)
+        before = {e["file_path"]: e["file_size_bytes"] for e in t.file_entries().to_pylist()}
+        res = merge.merge_into(
+            spark, t, _merge_source(spark, 128), job_id=job,
+            when_matched=when_matched, target_bytes=96 * 1024,
+        )
+        t = t.refresh()
+        after = {e["file_path"]: e["file_size_bytes"] for e in t.file_entries().to_pylist()}
+        units = lineage.read_phase(t.root, job, "merge").to_pylist()
+        assert len(units) > 1
+        tot = {
+            k: sum(dict(u["metrics"])[k] for u in units)
+            for k in ("updated", "unchanged", "inserted", "deleted", "bytes_in", "bytes_out")
+        }
+        assert tot["updated"] == res.updated and tot["unchanged"] == res.unchanged
+        assert tot["inserted"] == res.inserted == 8
+        assert tot["deleted"] == res.deleted
+        if when_matched == "update":
+            assert res.updated > 0 and res.deleted == 0
+        else:
+            assert res.deleted > 0 and res.updated == 0
+        assert scan(spark, t).count() - 128 == tot["inserted"] - tot["deleted"]
+        gone = set(before) - set(after)
+        assert tot["bytes_in"] == sum(before[p] for p in gone)
+        assert tot["bytes_out"] == sum(after[p] for p in set(after) - set(before))
+        assert {p for u in units for p in u["input_files"]} == gone
+
+
+def test_huge_source_merge_output_is_key_clustered(spark, tmp_path):
+    """The sort-merge path range-partitions its output on image_id, so the
+    files it writes cover disjoint key ranges."""
+    t, _ = make_table(spark, str(tmp_path / "tb"), n=256)
+    before = {e["file_path"] for e in t.file_entries().to_pylist()}
+    res = merge.merge_into(
+        spark, t, _merge_source(spark, 256), job_id="mhuge",
+        broadcast_threshold_rows=0, target_bytes=64 * 1024,
+    )
+    assert res.inserted == 8
+    new = sorted(
+        (e["min_key"], e["max_key"])
+        for e in t.refresh().file_entries().to_pylist()
+        if e["file_path"] not in before
+    )
+    assert len(new) > 2
+    assert all(hi < nxt_lo for (_, hi), (nxt_lo, _) in zip(new, new[1:]))
+
+
 # ------------------------------------------------------------- update_where
 
 

@@ -213,6 +213,35 @@ def test_merge_and_purge_preserve_partitions(spark, tmp_path):
     assert scan(spark, t).count() == 300 - 3
 
 
+def test_merge_update_moving_partition_source(spark, tmp_path):
+    """An update that changes ``fmt`` — the partition source column —
+    moves the row into a partition-pure file of its NEW value."""
+    import pandas as pd
+
+    from nessie_spark.lakehouse import merge
+
+    t, _ = _make(spark, str(tmp_path / "tb"), FMT_SPEC, n=200, seed=11)
+    rows = [synth.row_for(11, i) for i in range(0, 200, 9)]
+    flip = {"png": "jpeg", "jpeg": "png"}
+    for r in rows:
+        r["fmt"] = flip[r["fmt"]]
+    assert {r["fmt"] for r in rows} == {"png", "jpeg"}
+    src = spark.createDataFrame(pd.DataFrame(rows), schema=synth.IMAGES_SCHEMA)
+    res = merge.merge_into(spark, t, src, job_id="mflip")
+    assert res.updated == len(rows) and res.inserted == 0
+    t = t.refresh()
+    where = {}
+    for e in t.file_entries(columns=["file_path", "partition"]).to_pylist():
+        fmts = _file_fmts(t, e["file_path"])
+        assert len(fmts) == 1 and e["partition"] == f"fmt={next(iter(fmts))}"
+        ids = pq.read_table(
+            os.path.join(t.root, e["file_path"]), columns=["image_id"]
+        ).column("image_id").to_pylist()
+        where.update((i, e["partition"]) for i in ids)
+    assert len(where) == 200
+    assert all(where[r["image_id"]] == f"fmt={r['fmt']}" for r in rows)
+
+
 def test_health_signals_are_per_partition(spark, tmp_path):
     """A freshly-clustered partitioned table must read as ONE sorted run
     and ~zero overlap, not one run per partition value — otherwise maintain
