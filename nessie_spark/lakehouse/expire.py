@@ -73,7 +73,7 @@ def _live_paths_df(spark: SparkSession, table: Table, snapshot_ids: set[int]):
     )
     if not paths:
         return ddf or spark.createDataFrame([], "file_path string")
-    mdf = spark.read.parquet(*sorted(set(paths))).select("file_path")
+    mdf = spark.read.schema("file_path string").parquet(*sorted(set(paths)))
     return (mdf.unionByName(ddf) if ddf is not None else mdf).distinct()
 
 

@@ -503,13 +503,16 @@ def _decode_cohort(datas, metas, idxs, results) -> None:
         # decoder's T.81 padding validation: a finished lane must leave
         # 0-7 bits of 1-fill to its segment's byte boundary. Violating
         # lanes fall back to the scalar decoder, which raises the
-        # canonical "corrupt JPEG segment" error.
+        # canonical "corrupt JPEG segment" error. A zero-length segment has
+        # no last byte of its own (lens - 1 would index the previous lane's
+        # fill) and cannot hold an MCU, so a lane that "finished" on one is
+        # bad by itself.
         rem = (lens << 3) - end_bitpos
         clipped = np.clip(rem, 0, 7)
         mask = (np.int64(1) << clipped) - 1
-        last = D2[np.arange(L, dtype=np.int64) * stride + lens - 1].astype(np.int64)
+        last = D2[lane_off + np.maximum(lens, 1) - 1].astype(np.int64)
         pad_bad = (end_bitpos >= 0) & (
-            (rem < 0) | (rem >= 8) | ((last & mask) != mask)
+            (lens == 0) | (rem < 0) | (rem >= 8) | ((last & mask) != mask)
         )
         if pad_bad.any():
             for l in np.flatnonzero(pad_bad):

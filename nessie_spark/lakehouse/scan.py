@@ -2,8 +2,11 @@
 
 Two pruning layers (SURVEY.md §4.2):
 1. *manifest-level* (here): predicate intervals against per-file min/max
-   stats prune whole files before Spark ever lists them — at 10^12-image
-   scale this is the difference between touching 10 files and 10 million;
+   stats prune whole files before Spark sees a path — at 10^12-image
+   scale this is the difference between touching 10 files and 10 million.
+   Spark is then handed the surviving paths with an explicit schema and
+   only checks them on the driver: it never lists them in a job nor
+   infers a schema from their footers (session.get_spark);
 2. *row-group-level* (free): the same predicate is re-applied to the
    DataFrame, so Parquet footer min/max prunes row groups and the scan shows
    ``PushedFilters`` in ``.explain``.

@@ -89,6 +89,19 @@ def zorder_key(strategy: str = "morton"):
     raise NotImplementedError(f"unknown clustering strategy {strategy!r}")
 
 
+def _zkey_sample(spark: SparkSession, table: Table, paths: list[str], strategy: str):
+    """(phash, w, h, zkey, wh) of the named live files — the equi-depth
+    sample of a partial rewrite. Read through ``scan(file_paths=...)`` so
+    the files reach the parquet reader with the table's schema (no
+    schema-inference job) and renamed fields resolve by field id."""
+    key = zorder_key(strategy)
+    return (
+        scan(spark, table, columns=["phash", "w", "h"], file_paths=set(paths))
+        .withColumn("zkey", key(F.col("phash"), F.col("w"), F.col("h")))
+        .withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
+    )
+
+
 def _bucket_udf(bounds: list[int]):
     """Vectorized searchsorted over the broadcast boundary list (ints only —
     the pixel bytes never enter this UDF's columns). merge._bucket_udf is
@@ -390,6 +403,10 @@ def run_staged(
     table store — the standard shuffle-via-storage pattern (external sort
     with managed intermediates); G is the knob that bounds per-task memory
     (group bytes = table_bytes / G).
+
+    Returns ``(stats, stage_dir, plan_metrics)``: ``plan_metrics`` holds
+    the plan shape (scatter bins, gather groups, and whether each
+    min-parallelism floor engaged) for the job's lineage ``metrics``.
     """
     from nessie_spark.lakehouse.table import FILE_ENTRY_SCHEMA
     from nessie_spark.lakehouse.writer import stats_entry_for, write_table_file
@@ -417,9 +434,9 @@ def run_staged(
     # coarse in the scaling pair (2 vs 8 cores both run the identical
     # data-dominated plan — the clean-ratio property). Caveat: on tables
     # smaller than cores×64 MB the floor engages and the two levels plan
-    # DIFFERENT group counts — the engagement is logged to stderr so a
-    # scaling measurement can tell plan-shape effects from wave-count
-    # scaling.
+    # DIFFERENT group counts — the engagement is recorded in the job's
+    # lineage metrics (``gather_floor_engaged``) so a scaling measurement
+    # can tell plan-shape effects from wave-count scaling.
     try:
         gmult = max(1, int(os.environ.get("NESSIE_ZORDER_GROUP_MULT", "8")))
     except ValueError as exc:  # a mistyped knob must fail with its cause
@@ -432,16 +449,9 @@ def run_staged(
         1,
         min(n_files, max(data_groups, spark.sparkContext.defaultParallelism)),
     )
-    if n_groups > max(1, min(n_files, data_groups)):
-        import sys as _sys
-
-        print(
-            f"[zorder] gather min-parallelism floor engaged: data-sized "
-            f"groups={data_groups} -> n_groups={n_groups} — plan shape now "
-            f"depends on cluster width (scaling ratios across widths are "
-            f"not plan-identical on this table)",
-            file=_sys.stderr,
-        )
+    floors = {
+        "gather_floor_engaged": float(n_groups > max(1, min(n_files, data_groups)))
+    }
     stage_dir = os.path.join(root, "_stage", job_id)
     bounds_arr = list(bounds)
 
@@ -481,6 +491,7 @@ def run_staged(
         n_files = int(planned["n_files"])
         n_groups = int(planned["n_groups"])
         sbins = [list(b) for b in planned["sbins"]]
+        floors = planned.get("floors", {})
         # pre-r5 plans pinned no gather granularity → resume group-wise
         gather_unit_mode = planned.get("gather_unit", "group")
         live = {e["file_path"] for e in live_entries}
@@ -517,20 +528,16 @@ def run_staged(
         # never below 16 MB (shard-count blowup: each bin opens up to
         # n_groups shard writers). The 2- and 8-core scaling-gate runs on
         # bench-sized tables stay above the floor and keep the identical
-        # 64 MB plan (clean-ratio property); only wider runs re-plan.
+        # 64 MB plan (clean-ratio property); only wider runs re-plan. Once
+        # the floor engages, a FRESH plan of the same table depends on the
+        # cluster width (a resume still replays the pinned PLAN.json), so
+        # plans diffed across differently-sized clusters will not match.
         par = max(1, spark.sparkContext.defaultParallelism)
         sbin_bytes = max(
             2 * DEFAULT_TARGET,
             min(8 * DEFAULT_TARGET, total_bytes // par),
         )
-        if sbin_bytes < 8 * DEFAULT_TARGET:
-            import sys as _sys
-
-            print(
-                f"[zorder] scatter min-parallelism floor engaged: "
-                f"bin_bytes={sbin_bytes} (width {par})",
-                file=_sys.stderr,
-            )
+        floors["scatter_floor_engaged"] = float(sbin_bytes < 8 * DEFAULT_TARGET)
         sbins = _pack_scatter_bins(entries, sbin_bytes)
         os.makedirs(stage_dir, exist_ok=True)
         tmp = plan_path + ".tmp"
@@ -538,7 +545,7 @@ def run_staged(
             _json.dump(
                 {"bounds": [int(x) for x in bounds_arr], "n_files": n_files,
                  "n_groups": n_groups, "sbins": sbins,
-                 "gather_unit": gather_unit_mode},
+                 "gather_unit": gather_unit_mode, "floors": floors},
                 fh,
             )
         os.replace(tmp, plan_path)
@@ -846,7 +853,15 @@ def run_staged(
             added.append(
                 stats_entry_for(t, p, os.path.getsize(os.path.join(root, p)))
             )
-    return pa.Table.from_pylist(added, schema=FILE_ENTRY_SCHEMA), stage_dir
+    plan_metrics = {
+        "n_scatter_bins": float(len(sbins)),
+        "n_gather_groups": float(n_groups),
+        **floors,
+    }
+    return (
+        pa.Table.from_pylist(added, schema=FILE_ENTRY_SCHEMA), stage_dir,
+        plan_metrics,
+    )
 
 
 def _cluster_short_circuit(
@@ -1106,11 +1121,11 @@ def _cluster_partitioned(
             )
         os.replace(tmp, gpath)
 
-    key = zorder_key(strategy)
     all_stats: list[pa.Table] = []
     stage_dirs: list = [stage_parent]
     deleted: set = set()
     n_planned = 0
+    plan_metrics: dict[str, float] = {}
     for i, (pval, g, gpaths) in enumerate(grouped):
         sub_id = f"{job_id}-part{i:04d}"
         sub_plan = os.path.join(root, "_stage", sub_id, "PLAN.json")
@@ -1122,18 +1137,19 @@ def _cluster_partitioned(
         else:
             gbytes = sum(e["file_size_bytes"] for e in g)
             n_g = max(1, math.ceil(gbytes / target_bytes))
-            keys_df = (
-                spark.read.parquet(*[os.path.join(root, pp) for pp in gpaths])
-                .select("phash", "w", "h")
-                .withColumn("zkey", key(F.col("phash"), F.col("w"), F.col("h")))
-                .withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
-            )
             bounds = equi_depth_bounds(
-                keys_df, n_g, sum(e["record_count"] for e in g)
+                _zkey_sample(spark, table, gpaths, strategy), n_g,
+                sum(e["record_count"] for e in g),
             )
-        stats_g, sd = run_staged(
+        stats_g, sd, pm = run_staged(
             spark, table, bounds, n_g, sub_id, strategy, reencode, entries=g
         )
+        # counts add up over the groups; a floor engaged if it did in any
+        for k, v in pm.items():
+            plan_metrics[k] = (
+                max(plan_metrics.get(k, 0.0), v) if k.endswith("_engaged")
+                else plan_metrics.get(k, 0.0) + v
+            )
         if stats_g.num_rows:
             idx = stats_g.schema.get_field_index("partition")
             stats_g = stats_g.set_column(
@@ -1160,6 +1176,7 @@ def _cluster_partitioned(
             "n_files_planned": float(n_planned),
             "partition_groups": float(len(grouped)),
             "incremental": float(incremental),
+            **plan_metrics,
         },
         stage_dir=stage_dirs,
         carried_manifest_summaries=carried_manifest_summaries,
@@ -1267,8 +1284,9 @@ def cluster(
     # Python-native external sort; see run_staged) or shuffle (JVM exchange;
     # see write_zorder_buckets). Both produce one file per bucket.
     stage_dir = None
+    plan_metrics: dict[str, float] = {}
     if execution == "staged":
-        stats, stage_dir = run_staged(
+        stats, stage_dir, plan_metrics = run_staged(
             spark, table, bounds, n_files, job_id, strategy, reencode
         )
     elif execution == "shuffle":
@@ -1295,7 +1313,8 @@ def cluster(
         operation=strategy if strategy != "morton" else "zorder",
         summary={"job_id": job_id, "strategy": strategy},
         metrics={"n_files_planned": float(n_files),
-                 "strategy_hilbert": float(strategy == "hilbert")},
+                 "strategy_hilbert": float(strategy == "hilbert"),
+                 **plan_metrics},
         stage_dir=stage_dir,
         carried_manifest_summaries=[],  # full rewrite: nothing carried
     )
@@ -1396,17 +1415,13 @@ def cluster_incremental(
             return ClusterResult(None, job_id, strategy, 0, 0, 0)
         delta_bytes = sum(e["file_size_bytes"] for e in delta)
         n_files = max(1, math.ceil(delta_bytes / target_bytes))
-        key = zorder_key(strategy)
-        keys_df = (
-            spark.read.parquet(*[os.path.join(root, p) for p in delta_paths])
-            .select("phash", "w", "h")
-            .withColumn("zkey", key(F.col("phash"), F.col("w"), F.col("h")))
-            .withColumn("wh", F.col("w").cast("long") * F.col("h").cast("long"))
-        )
         total_rows = sum(e["record_count"] for e in delta)
-        bounds = equi_depth_bounds(keys_df, n_files, total_rows)
+        bounds = equi_depth_bounds(
+            _zkey_sample(spark, table, delta_paths, strategy), n_files,
+            total_rows,
+        )
 
-    stats, stage_dir = run_staged(
+    stats, stage_dir, plan_metrics = run_staged(
         spark, table, bounds, n_files, job_id, strategy, reencode,
         entries=delta,
     )
@@ -1416,7 +1431,8 @@ def cluster_incremental(
         operation="zorder-delta",
         summary={"job_id": job_id, "strategy": strategy,
                  "delta_files": len(delta_paths)},
-        metrics={"n_files_planned": float(n_files), "incremental": 1.0},
+        metrics={"n_files_planned": float(n_files), "incremental": 1.0,
+                 **plan_metrics},
         stage_dir=stage_dir,
         carried_manifest_summaries=None,  # carry the untouched base runs
     )

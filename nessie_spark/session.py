@@ -10,6 +10,10 @@ Design notes (scale-first):
   correctness driver supplies its own session.
 - Arrow batch size bounded by records; for binary image payloads the writer
   path additionally re-batches by bytes (see lakehouse.kernels).
+- Manifests are the file index. Every engine read of table files hands
+  Spark the exact paths the manifests name, with an explicit schema, so
+  Spark neither lists them in a job nor samples a footer to infer a
+  schema; the paths are only checked on the driver.
 """
 
 from __future__ import annotations
@@ -60,6 +64,13 @@ def get_spark(
         .config("spark.sql.parquet.columnarReaderBatchSize", "512")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # Explicit file lists are checked on the driver, never listed in a
+        # Spark job. Above the default threshold of 32 paths Spark lists
+        # them in a job with one task per path. Building a DataFrame over
+        # local parquet files on a 4-vCPU host: 500 paths 4.1 s with the
+        # job vs 0.15 s on the driver, 5000 paths 26.8 s vs 1.1 s. The
+        # table store is a POSIX filesystem, so the job buys no parallel I/O.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647")
         .config("spark.driver.memory", os.environ.get("NESSIE_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")

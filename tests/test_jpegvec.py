@@ -187,3 +187,46 @@ def test_segment_padding_validation_catches_structural_flips():
         assert (px == J.decode_jpeg_real(bytes(r["bytes"]))).all()
     except ValueError as e:
         assert "corrupt JPEG segment" in str(e)
+
+
+def _empty_restart_segment(d: bytes, k: int) -> bytes:
+    """``d`` with the entropy bytes of restart segment ``k`` removed, so
+    the scan holds a zero-length segment between two markers."""
+    sos = d.index(b"\xff\xda")
+    pos = sos + 2 + int.from_bytes(d[sos + 2 : sos + 4], "big")
+    starts = [pos]
+    ends = []
+    while True:
+        j = d.index(b"\xff", pos)
+        if 0xD0 <= d[j + 1] <= 0xD7:  # RSTn ends a segment
+            ends.append(j)
+            starts.append(j + 2)
+        elif d[j + 1] != 0x00:  # EOI ends the scan
+            ends.append(j)
+            break
+        pos = j + 2
+    return d[: starts[k]] + d[ends[k] :]
+
+
+@pytest.mark.parametrize("which", ["first", "middle", "last"])
+def test_decode_batch_zero_length_restart_segment_parity(which):
+    """A zero-length restart segment gets the scalar decoder's pixels or
+    its error from decode_batch, wherever the empty lane sits (the first
+    lane has no previous lane to borrow a padding byte from)."""
+    d = J.encode_jpeg_real(_images(1, lo=32, hi=32)[0], 98, restart_mcu=1)
+    n_seg = len(J._split_scan(J._parse_stream(d)["scan_data"]))
+    k = {"first": 0, "middle": n_seg // 2, "last": n_seg - 1}[which]
+    bad = _empty_restart_segment(d, k)
+    segs = J._split_scan(J._parse_stream(bad)["scan_data"])
+    assert len(segs) == n_seg and len(segs[k]) == 0
+    try:
+        scalar_out, scalar_err = J.decode_jpeg_real(bad), None
+    except Exception as e:  # noqa: BLE001
+        scalar_out, scalar_err = None, e
+    # alone, and behind a clean stream whose lanes precede the empty one
+    for batch in ([bad], [d, bad]):
+        if scalar_err is None:
+            assert (V.decode_batch(batch)[-1] == scalar_out).all()
+        else:
+            with pytest.raises(type(scalar_err), match=str(scalar_err)):
+                V.decode_batch(batch)

@@ -106,7 +106,33 @@ def test_corruption_flag_rate_matches_p(spark):
     # restart_mcu=1 confining damage to one MCU it sits below the
     # perceptual hash's sensitivity. Pin that single known miss so any
     # NEW miss (a detection regression) still fails this test.
+    _assert_known_miss_is_valid_flip(100)
     assert expected - flagged_ids == {"img_000000000100"}
+
+
+def _assert_known_miss_is_valid_flip(i: int) -> None:
+    """The pinned miss must still be what the pin says it is: a corrupted
+    JPEG that BOTH decoders accept with identical pixels and whose phash
+    equals the stored one. If this fails, the fixture drifted (generator
+    or corruption offsets changed) — re-derive the pin; it is not a
+    detector regression."""
+    from nessie_spark.lakehouse import jpegcodec as J
+    from nessie_spark.lakehouse import jpegvec as V
+    from nessie_spark.lakehouse import kernels as K
+
+    r = synth.row_for(42, i, hot_pct=0)
+    orig = bytes(r["bytes"])
+    corrupt = synth.corrupt_bytes(orig, seed=9, i=i)
+    drift = f"fixture drift: img {i} is no longer a valid-stream phash-equal flip"
+    assert r["fmt"] == "jpeg" and corrupt != orig, drift
+    try:
+        px = J.decode_jpeg_real(corrupt)
+        px_batch = V.decode_batch([corrupt])[0]
+    except ValueError as e:
+        raise AssertionError(f"{drift} ({e})") from e
+    assert (px == px_batch).all(), drift
+    assert (px != J.decode_jpeg_real(orig)).any(), drift
+    assert int(K.phash64(px)) == int(r["phash"]), drift
 
 
 def test_duplicate_phash_flags(spark):

@@ -103,3 +103,62 @@ def test_scan_distributed_parity_with_mor_deletes(spark, tmp_path):
               planner="distributed").count()
     kb = scan(spark, t, key_range=("img_000000000050", "img_000000000150")).count()
     assert ka == kb
+
+
+def _spark_jobs(spark, group: str, fn):
+    """Run ``fn`` under its own job group; return (result, #Spark jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_planned_reads_run_no_listing_or_schema_job(spark, tmp_path):
+    """Manifests are the file index: a DataFrame over manifest-planned
+    files is built without any Spark job — no parallel listing of the
+    paths (Spark lists more than 32 paths in a job unless told otherwise)
+    and no schema-inference job — and a full scan collects in ONE job."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nessie_spark.lakehouse.expire import _live_paths_df
+
+    t, _ = make_table(spark, str(tmp_path / "tb"), n=320, mean_rows=6)
+    live = t.file_entries(columns=["file_path", "min_phash", "max_phash"]).to_pylist()
+    assert len(live) >= 40
+    lo = sorted(e["min_phash"] for e in live)[len(live) // 4]
+    hi = sorted(e["max_phash"] for e in live)[3 * len(live) // 4]
+    assert len(plan_files(t, phash_range=(lo, hi))) > 32
+
+    full, n = _spark_jobs(spark, "build-scan", lambda: scan(spark, t))
+    assert n == 0
+    _, n = _spark_jobs(
+        spark, "build-range", lambda: scan(spark, t, phash_range=(lo, hi))
+    )
+    assert n == 0
+    _, n = _spark_jobs(spark, "build-files", lambda: t.files_df(spark))
+    assert n == 0
+    _, n = _spark_jobs(
+        spark, "build-live",
+        lambda: _live_paths_df(spark, t, {t.current_snapshot_id}),
+    )
+    assert n == 0
+
+    rows, n = _spark_jobs(spark, "collect-scan", full.collect)
+    assert n == 1
+    want = pa.concat_tables(
+        pq.read_table(os.path.join(t.root, e["file_path"]), columns=full.columns)
+        for e in plan_files(t)
+    )
+
+    def norm(row):
+        return tuple(bytes(v) if isinstance(v, bytearray) else v for v in row)
+
+    got = sorted(norm(tuple(r)) for r in rows)
+    assert got == sorted(norm(tuple(r.values())) for r in want.to_pylist())
+    assert len(got) == 320

@@ -189,3 +189,24 @@ def test_maintain_executes_cluster_delta(spark, tmp_path):
     assert rep.snapshots["cluster-delta"] is not None
     assert rep.health_after.unclustered_files == 0
     assert rep.health_after.sorted_runs == 2
+
+
+def test_cluster_records_plan_shape_in_lineage(spark, tmp_path, capfd):
+    """The staged plan's shape — scatter bins, gather groups, and whether
+    each min-parallelism floor engaged — lands in the job's lineage
+    metrics for both the full and the incremental rewrite; nothing is
+    printed to stderr."""
+    from nessie_spark.lakehouse import lineage
+
+    t = _clustered_base(spark, tmp_path)
+    t = _append_batch(spark, t)
+    zorder.cluster_incremental(spark, t, target_bytes=TARGET, job_id="d1")
+    for job in ("full0", "d1"):
+        (unit,) = lineage.read_phase(t.root, job, "morton").to_pylist()
+        m = dict(unit["metrics"])
+        assert m["n_scatter_bins"] >= 1 and m["n_gather_groups"] >= 1
+        # a table far below width x 64 MB: the scatter floor shrinks the
+        # bins, and the gather floor lifts the one data-sized group
+        assert m["scatter_floor_engaged"] == 1.0
+        assert m["gather_floor_engaged"] == float(m["n_gather_groups"] > 1)
+    assert "[zorder]" not in capfd.readouterr().err
